@@ -106,12 +106,14 @@ def link_entities(annotations: DataFrame, candidates: DataFrame,
     # carried the full lowered token list of its document). The argmax
     # is a partial-aggregated min_by — same (score desc, uri asc)
     # winner the row_number window picked, but map-side combine sends
-    # one candidate per span per task instead of all of them.
+    # one candidate per span per task instead of all of them. A struct
+    # orders a NULL field first, so a NULL score is coalesced to +inf
+    # to rank last, as desc(score) (NULLS LAST) did.
     scored = (joined.withColumn("score", F.col("prior") * (1.0 + overlap))
               .select("url", "begin", "end", "uri", "score"))
+    rank = F.coalesce(-F.col("score"), F.lit(float("inf")))
     best = F.min_by(F.struct("uri", "score"),
-                    F.struct((-F.col("score")).alias("s"),
-                             F.col("uri").alias("u")))
+                    F.struct(rank.alias("s"), F.col("uri").alias("u")))
     linked = (scored.groupBy("url", "begin", "end")
               .agg(best.alias("_best"))
               .select("url", "begin", "end",

@@ -5,13 +5,22 @@ with spo/pos sort orders and snapshot metadata); the Iceberg runtime
 jar is not in this sandbox, so this module provides the same
 *semantics* on plain parquet:
 
-- every commit writes data files under ``data/<snapshot_id>/`` and then
-  atomically publishes a ``snapshot-<n>.json`` manifest (rename is the
-  commit point, like Iceberg's metadata swap);
+- every commit (append, overwrite, merge, rewrite) writes data files
+  under ``data/<snapshot_id>/`` and then publishes exactly one
+  ``snapshot-<n>.json`` manifest with one atomic rename (the commit
+  point, like Iceberg's metadata swap): no reader ever sees a manifest
+  the commit did not mean to publish;
 - manifests carry lineage: input snapshot, per-partition row counts,
   committed urls digest, wall time;
 - readers resolve the latest manifest and read exactly its files —
-  uncommitted data is invisible (snapshot isolation);
+  uncommitted data is invisible (snapshot isolation). A committed
+  snapshot is immutable (its files are written once under a fresh
+  dir), so ``read`` resolves the latest snapshot once per SparkSession:
+  later reads re-check the latest manifest (a listdir plus one small
+  JSON) and, while its data dirs are unchanged, return the same
+  DataFrame with no file listing and no schema-inference job;
+- reading has no side effects: directories are created by the first
+  commit, never by opening or reading a table;
 - resume = anti-join new work against the committed ``url`` set of the
   latest snapshot (skip-done semantics of FolderOrchestrator.java:166-176
   and RDFGenerator.java:372-393).
@@ -24,11 +33,18 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 import uuid
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+# Latest-snapshot DataFrames, resolved once per session. The cache lives
+# on the SparkSession object ({table root: (key, DataFrame)}), so it dies
+# with the session and a new session never sees another's DataFrames.
+_READS_ATTR = "_pikes_snapshot_reads"
+_READS_LOCK = threading.Lock()
 
 
 class SnapshotTable:
@@ -37,12 +53,12 @@ class SnapshotTable:
         self.root = root
         self.name = name
         self.sort_cols = sort_cols or []
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
-        os.makedirs(os.path.join(root, "meta"), exist_ok=True)
 
     # ------------------------------------------------------------------
     def _manifests(self) -> List[str]:
         meta = os.path.join(self.root, "meta")
+        if not os.path.isdir(meta):
+            return []
         return sorted(f for f in os.listdir(meta) if f.startswith("snapshot-"))
 
     def latest_snapshot(self) -> Optional[dict]:
@@ -53,11 +69,13 @@ class SnapshotTable:
             return json.load(fh)
 
     # ------------------------------------------------------------------
-    def append(self, df: DataFrame, spark: SparkSession,
-               lineage: Optional[dict] = None) -> dict:
-        """Write df as a new snapshot (previous snapshot's files + the
-        new data dir). Sort-within-partitions by the table sort order
-        (spo/pos layout) before writing."""
+    def _commit(self, df: DataFrame, lineage: Optional[dict],
+                replace: bool) -> dict:
+        """Write df under a fresh data dir, then publish its manifest
+        with one rename (the commit point). The manifest references the
+        new dir alone when ``replace``, else the previous snapshot's
+        dirs plus the new one. Sort-within-partitions by the table sort
+        order (spo/pos layout) before writing."""
         from pyspark.sql import Observation
 
         snap_id = uuid.uuid4().hex[:12]
@@ -74,44 +92,43 @@ class SnapshotTable:
         # comparable write cost — at 10^12 triples the scan economics
         # dominate, and the sorted layout compresses especially well
         out.write.mode("errorifexists").option("compression", "zstd")            .parquet(data_dir)
-        stats = {"rows": obs.get["rows"]}
+        rows = obs.get["rows"]
         prev = self.latest_snapshot()
+        kept = prev if prev and not replace else {"data_dirs": [], "total_rows": 0}
         manifest = {
             "table": self.name,
             "snapshot_id": snap_id,
             "parent": prev["snapshot_id"] if prev else None,
             "sequence": (prev["sequence"] + 1) if prev else 0,
-            "data_dirs": (prev["data_dirs"] if prev else []) + [data_dir],
-            "added_rows": stats["rows"],
-            "total_rows": (prev["total_rows"] if prev else 0) + stats["rows"],
+            "data_dirs": kept["data_dirs"] + [data_dir],
+            "added_rows": rows,
+            "total_rows": kept["total_rows"] + rows,
             "write_seconds": round(time.time() - t0, 3),
             "lineage": lineage or {},
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        tmp = os.path.join(self.root, "meta", f".tmp-{snap_id}.json")
-        final = os.path.join(self.root, "meta",
+        meta = os.path.join(self.root, "meta")
+        os.makedirs(meta, exist_ok=True)
+        tmp = os.path.join(meta, f".tmp-{snap_id}.json")
+        final = os.path.join(meta,
                              f"snapshot-{manifest['sequence']:06d}-{snap_id}.json")
         with open(tmp, "w") as fh:
             json.dump(manifest, fh, indent=1)
         os.rename(tmp, final)  # atomic commit point
         return manifest
 
+    def append(self, df: DataFrame, spark: SparkSession,
+               lineage: Optional[dict] = None) -> dict:
+        """Commit df as a new snapshot holding the previous snapshot's
+        files plus the new data dir."""
+        return self._commit(df, lineage, replace=False)
+
     def overwrite(self, df: DataFrame, spark: SparkSession,
                   lineage: Optional[dict] = None) -> dict:
         """Commit a snapshot that REPLACES the table contents (manifest
         points only at the new data dir; older snapshots stay readable
         by their own manifests — Iceberg overwrite semantics)."""
-        manifest = self.append(df, spark, lineage=lineage)
-        manifest["data_dirs"] = manifest["data_dirs"][-1:]
-        manifest["total_rows"] = manifest["added_rows"]
-        final = os.path.join(
-            self.root, "meta",
-            f"snapshot-{manifest['sequence']:06d}-{manifest['snapshot_id']}.json")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh, indent=1)
-        os.rename(tmp, final)
-        return manifest
+        return self._commit(df, lineage, replace=True)
 
     def has_lineage(self, key: str, value) -> bool:
         """True if ANY committed snapshot's lineage carries key == value
@@ -140,15 +157,39 @@ class SnapshotTable:
         one by its sequence number (Iceberg VERSION AS OF).
         merge_schema=True unifies data files written under different
         schemas (Iceberg schema evolution: later columns read as NULL
-        on older files)."""
+        on older files).
+
+        The latest snapshot is resolved once per session: while the
+        latest manifest's data dirs (and merge_schema) are unchanged,
+        this returns the DataFrame built by the first read, skipping
+        the file listing and the schema-inference job. Time-travel
+        reads are not cached."""
         snap = (self.latest_snapshot() if sequence is None
                 else self.snapshot(sequence))
         if snap is None or not snap["data_dirs"]:
             return None
+        if sequence is not None:
+            return self._load(spark, snap["data_dirs"], merge_schema)
+        key = (tuple(snap["data_dirs"]), merge_schema)
+        with _READS_LOCK:
+            reads = spark.__dict__.setdefault(_READS_ATTR, {})
+            hit = reads.get(self.root)
+        if hit is not None and hit[0] == key:
+            return hit[1]
+        # built outside the lock: a racing reader may store an older
+        # entry, which the key check above then refuses and replaces
+        df = self._load(spark, snap["data_dirs"], merge_schema)
+        with _READS_LOCK:
+            reads[self.root] = (key, df)
+        return df
+
+    @staticmethod
+    def _load(spark: SparkSession, data_dirs: List[str],
+              merge_schema: bool) -> DataFrame:
         reader = spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*snap["data_dirs"])
+        return reader.parquet(*data_dirs)
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Table maintenance (Iceberg expire_snapshots): drop manifests

@@ -26,6 +26,22 @@ def test_linking_picks_best_candidate(spark):
     assert paris and all(r["uri"] == "http://dbpedia.org/resource/Paris" for r in paris)
 
 
+def test_linking_null_score_ranks_last(spark):
+    """A candidate whose prior is NULL never beats a scored one for the
+    same span, whichever sorts first by uri."""
+    from pikes_spark.operators.linking import link_entities
+    ann = spark.createDataFrame(
+        [("u", [("Paris", 0, 5)], [(True, [0])])],
+        "url string, tokens array<struct<form:string, begin:int, len:int>>, "
+        "entities array<struct<named:boolean, term_ids:array<int>>>")
+    cands = spark.createDataFrame(
+        [("paris", "http://x/A_null", None, ["a"]),
+         ("paris", "http://x/B_scored", 0.5, ["b"])],
+        "surface string, uri string, prior double, ctx array<string>")
+    links = link_entities(ann, cands).collect()
+    assert [(r["uri"], r["score"]) for r in links] == [("http://x/B_scored", 0.5)]
+
+
 def test_minhash_lsh_equals_exact_jaccard(spark):
     from pikes_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
     lsh = {(r["a"], r["b"], r["jaccard_x1000"])
